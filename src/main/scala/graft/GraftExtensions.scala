@@ -161,25 +161,10 @@ object GraftExtensions {
           .queryExecution.logical
       })
 
-  /** Maintenance TVF: the ACTION runs at resolution (like the OPTIMIZE /
-    * VACUUM parser verbs) and the returned one-row relation is its
-    * outcome report — a SQL-only user operates the index lifecycle
-    * without the Scala API.
-    *
-    * CAVEAT — resolution IS execution: anything that re-analyzes the
-    * statement re-runs the action. `EXPLAIN ivf_index_build(...)` builds
-    * a whole new index; a view over a maintenance TVF re-executes on
-    * every re-resolution. `ivf_index_refresh` alone is replay-guarded by
-    * its (appId, version) txn identity (a re-resolution no-ops);
-    * `ivf_index_build` / `ivf_index_rebuild_if_drifted` /
-    * `ivf_index_vacuum` are NOT idempotent across re-analysis — never
-    * EXPLAIN them, never put them in views. Each usage string repeats
-    * this and names the EXPLAIN-safe alternative: the `IVF BUILD/
-    * REFRESH/REBUILD/VACUUM INDEX` parser VERBS
-    * ([[graft.sources.BtrIvfCommands]]) execute at run() like
-    * OPTIMIZE/VACUUM and are the recommended surface for automation;
-    * both front-ends share one action layer
-    * ([[graft.functions.IvfMaintenance]]).
+  /** Read-only IVF index inspection: all arguments are constants and the
+    * returned one-row relation is computed when the function resolves.
+    * Index maintenance is the `IVF BUILD/REFRESH/REBUILD/VACUUM INDEX`
+    * verbs ([[graft.sources.BtrIvfCommands]]), which run at `run()`.
     */
   private def ivfTvf(name: String, usage: String, minArgs: Int, maxArgs: Int)(
       f: (org.apache.spark.sql.SparkSession, Seq[Expression]) => org.apache.spark.sql.DataFrame
@@ -192,51 +177,6 @@ object GraftExtensions {
             s"$name expects $minArgs..$maxArgs arguments — $usage — got ${args.length}")
         f(org.apache.spark.sql.SparkSession.active, args).queryExecution.logical
       })
-
-  /** Mutation-TVF guard (VERDICT r19 #6): the four mutating TVFs execute
-    * their action at statement RESOLUTION, so EXPLAIN / DESCRIBE / a view
-    * re-running analysis silently re-runs a build/refresh/rebuild/vacuum
-    * — the exact footgun the `IVF …` parser verbs exist to avoid. Modes
-    * (`spark.graft.ivf.tvfMutations`):
-    *   - `warn` (default): execute, but log ONE loud deprecation warning
-    *     per function per JVM pointing at the EXPLAIN-safe verb;
-    *   - `refuse`: fail the statement with the verb spelled out —
-    *     the lockdown setting for shared clusters;
-    *   - `allow`: execute silently (scripted migrations that accept the
-    *     resolution-time contract).
-    * Read-only TVFs (`state`/`staleness`/`fresh`/`drift`) are untouched.
-    */
-  private val mutationTvfWarned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def guardMutationTvf(
-      spark: org.apache.spark.sql.SparkSession, name: String, verb: String): Unit =
-    spark.conf.get("spark.graft.ivf.tvfMutations", "warn") match {
-      case "refuse" => throw new IllegalStateException(
-        s"$name refused (spark.graft.ivf.tvfMutations=refuse): maintenance TVFs execute " +
-          "at statement RESOLUTION — EXPLAIN/DESCRIBE/views re-run the action. Use the " +
-          s"EXPLAIN-safe parser verb instead: $verb")
-      case "allow" => ()
-      case _ =>
-        if (mutationTvfWarned.add(name))
-          org.apache.log4j.Logger.getLogger(getClass).warn(
-            s"$name executes at statement RESOLUTION (EXPLAIN/DESCRIBE/views re-run the " +
-              s"action) and is deprecated for automation — prefer the EXPLAIN-safe verb: " +
-              s"$verb. Set spark.graft.ivf.tvfMutations=refuse to forbid, =allow to silence.")
-    }
-
-  private def corpusDf(spark: org.apache.spark.sql.SparkSession, tableDir: String,
-      idCol: String, vecCol: String, versionAsOf: Option[Long]): org.apache.spark.sql.DataFrame = {
-    val r0 = spark.read.format("btr")
-    val r = versionAsOf.fold(r0)(v => r0.option("btr.versionAsOf", v.toString))
-    r.load(tableDir).select(
-      org.apache.spark.sql.functions.col(idCol).as("cid"),
-      org.apache.spark.sql.functions.col(vecCol).as("cvec"))
-  }
-
-  private def latestVersionOf(tableDir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = p.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
-    graft.sources.BtrLog.latestVersion(fs, fs.makeQualified(p))
-  }
 
   private[graft] val tableFunctions: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] = Seq(
@@ -264,49 +204,7 @@ object GraftExtensions {
     tvf("btr_partitions",
       "btr_partitions(path) - per-partition-dir files/rows/bytes/mask debt (metadata only)")(
       graft.functions.BtrInspect.partitions),
-    // ---- IVF index lifecycle (SQL-only operators) --------------------
-    // Maintenance verbs, not queries: the action runs when the TVF is
-    // resolved (like OPTIMIZE/VACUUM through the parser) and the returned
-    // single row is its outcome report. All arguments are constants.
-    ivfTvf("ivf_index_build",
-      "ivf_index_build(tableDir, idCol, vecCol, indexDir[, nlist[, storage]]) - fit the " +
-        "coarse quantizer over the table's CURRENT snapshot and (re)build the persisted " +
-        "index crash-atomically; records the corpus version for refresh convergence. " +
-        "storage: 'f64' (default) | 'f32' | 'i8' stored-vector precision. " +
-        "Runs at statement RESOLUTION: EXPLAIN/DESCRIBE/views re-execute the build — " +
-        "automation should use the EXPLAIN-safe verb: IVF BUILD INDEX '<idx>' FROM <t> (id, vec)",
-      4, 6) { (spark, args) =>
-      import spark.implicits._
-      guardMutationTvf(spark, "ivf_index_build",
-        "IVF BUILD INDEX '<idx>' FROM <t> (id, vec) [NLIST n] [STORAGE 's']")
-      val Seq(table, idCol, vecCol, idxDir) = args.take(4).map(strLit(_, "ivf_index_build"))
-      val nlist = if (args.length >= 5) intLit(args(4), "ivf_index_build", "nlist") else 16
-      val storage = if (args.length == 6) strLit(args(5), "ivf_index_build") else "f64"
-      val (bv, cv) = graft.functions.IvfMaintenance.build(
-        spark, table, idCol, vecCol, idxDir, nlist, storage)
-      Seq((bv, cv)).toDF("build_version", "corpus_version")
-    }
-    ,
-    ivfTvf("ivf_index_refresh",
-      "ivf_index_refresh(tableDir, idCol, vecCol, indexDir, appId, from[, to]) - apply " +
-        "the table's change feed (from, to] to the index under (appId, to) txn " +
-        "identity; retried batches no-op",
-      6, 7) { (spark, args) =>
-      import spark.implicits._
-      guardMutationTvf(spark, "ivf_index_refresh",
-        "IVF REFRESH INDEX '<idx>' FROM <t> (id, vec) APP '<app>' VERSIONS f [TO t]")
-      val Seq(table, idCol, vecCol, idxDir, appId) =
-        args.take(5).map(strLit(_, "ivf_index_refresh"))
-      val from = intLit(args(5), "ivf_index_refresh", "from").toLong
-      val to: Option[Long] =
-        if (args.length == 7) Some(intLit(args(6), "ivf_index_refresh", "to").toLong)
-        else None
-      val (a, d, drift, replayed) = graft.functions.IvfMaintenance.refresh(
-        spark, table, idCol, vecCol, idxDir, appId, from, to)
-      Seq((a, d, drift, replayed))
-        .toDF("rows_assigned", "rows_deleted", "drift", "replayed")
-    }
-    ,
+    // ---- IVF index inspection (read-only) ----------------------------
     ivfTvf("ivf_index_staleness",
       "ivf_index_staleness(tableDir, idCol, vecCol, indexDir) - corpus rows the " +
         "index has not assigned yet (monitoring; the query path falls back on them)",
@@ -314,7 +212,7 @@ object GraftExtensions {
       import spark.implicits._
       val Seq(table, idCol, vecCol, idxDir) = args.map(strLit(_, "ivf_index_staleness"))
       val n = graft.functions.SimilarityOps.ivfIndexStaleness(
-        corpusDf(spark, table, idCol, vecCol, None), idxDir)
+        graft.sources.BtrIvfCommands.corpusDf(spark, table, idCol, vecCol, None), idxDir)
       Seq(Tuple1(n)).toDF("stale_rows")
     }
     ,
@@ -337,58 +235,21 @@ object GraftExtensions {
       val Seq(table, idCol, vecCol, idxDir) = args.take(4).map(strLit(_, "ivf_index_drift"))
       val rows = if (args.length == 5) intLit(args(4), "ivf_index_drift", "sampleRows") else 10000
       val d = graft.functions.SimilarityOps.ivfIndexDriftProbe(
-        corpusDf(spark, table, idCol, vecCol, None), idxDir, sampleRows = rows)
+        graft.sources.BtrIvfCommands.corpusDf(spark, table, idCol, vecCol, None), idxDir,
+        sampleRows = rows)
       Seq(Tuple1(d)).toDF("drift")
-    }
-    ,
-    ivfTvf("ivf_index_rebuild_if_drifted",
-      "ivf_index_rebuild_if_drifted(tableDir, idCol, vecCol, indexDir[, minDriftPct]) - " +
-        "probe drift and rebuild crash-atomically below minDriftPct/100 (default 80). " +
-        "Runs at statement RESOLUTION: EXPLAIN/DESCRIBE/views re-probe and may rebuild — " +
-        "automation should use the verb: IVF REBUILD INDEX '<idx>' FROM <t> (id, vec) IF DRIFT BELOW 80",
-      4, 5) { (spark, args) =>
-      import spark.implicits._
-      guardMutationTvf(spark, "ivf_index_rebuild_if_drifted",
-        "IVF REBUILD INDEX '<idx>' FROM <t> (id, vec) IF DRIFT BELOW p")
-      val Seq(table, idCol, vecCol, idxDir) =
-        args.take(4).map(strLit(_, "ivf_index_rebuild_if_drifted"))
-      val pct =
-        if (args.length == 5) intLit(args(4), "ivf_index_rebuild_if_drifted", "minDriftPct")
-        else 80
-      val (rebuilt, drift, bv) = graft.functions.IvfMaintenance.rebuildIfDrifted(
-        spark, table, idCol, vecCol, idxDir, pct)
-      Seq((rebuilt, drift, bv)).toDF("rebuilt", "drift", "build_version")
-    }
-    ,
-    ivfTvf("ivf_index_vacuum",
-      "ivf_index_vacuum(indexDir[, keepLast]) - drop superseded index builds. " +
-        "Default keepLast=2 keeps the current AND one prior build (in-flight " +
-        "readers that resolved the pointer pre-rebuild finish intact); keepLast=1 " +
-        "breaks such readers. Staged rebuilds above the pointer are untouched. " +
-        "Runs at statement RESOLUTION: EXPLAIN/DESCRIBE/views re-run the vacuum — " +
-        "automation should use the verb: IVF VACUUM INDEX '<idx>' [KEEP n]",
-      1, 2) { (spark, args) =>
-      import spark.implicits._
-      guardMutationTvf(spark, "ivf_index_vacuum", "IVF VACUUM INDEX '<idx>' [KEEP n]")
-      val idxDir = strLit(args.head, "ivf_index_vacuum")
-      val keep = if (args.length == 2) intLit(args(1), "ivf_index_vacuum", "keepLast") else 2
-      Seq(Tuple1(graft.functions.IvfMaintenance.vacuum(idxDir, keep)))
-        .toDF("dropped_dirs")
     }
     ,
     ivfTvf("ivf_index_state",
       "ivf_index_state(indexDir) - current build: tables root, build version, " +
-        "recorded corpus version, stored-vector layout (storage f64/f32/i8 or " +
-        "'membership' for a vectorless index) and cell count " +
-        "(pure inspection, no action)",
+        "recorded corpus version, stored-vector storage (f64/f32/i8) and base cell " +
+        "count (pure inspection, no action)",
       1, 1) { (spark, args) =>
       import spark.implicits._
       val idx = strLit(args.head, "ivf_index_state")
       val st = graft.functions.SimilarityOps.ivfIndexState(idx)
-      val (store, storage, nlist) =
-        graft.functions.SimilarityOps.ivfIndexLayoutOf(spark, idx)
-      Seq((st.root, st.buildVersion, st.corpusVersion.getOrElse(-1L),
-        if (store) storage else "membership", nlist))
+      val (storage, nlist) = graft.functions.SimilarityOps.ivfIndexLayoutOf(spark, idx)
+      Seq((st.root, st.buildVersion, st.corpusVersion.getOrElse(-1L), storage, nlist))
         .toDF("root", "build_version", "corpus_version", "storage", "nlist")
     }
     ,
@@ -408,13 +269,8 @@ object GraftExtensions {
         val from = intLit(args(1), "btr_changes", "from").toLong
         val to: Long =
           if (args.length == 3) intLit(args(2), "btr_changes", "to").toLong
-          else {
-            val p = new org.apache.hadoop.fs.Path(dir)
-            val fs = p.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
-            graft.sources.BtrLog.latestVersion(fs, fs.makeQualified(p)).getOrElse(
-              throw new IllegalArgumentException(
-                s"btr_changes: no snapshot log at $dir"))
-          }
+          else graft.sources.BtrLog.latestVersionOf(dir).getOrElse(
+            throw new IllegalArgumentException(s"btr_changes: no snapshot log at $dir"))
         graft.sources.BtrChanges.between(spark, dir, from, to)
           .queryExecution.logical
       })

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass distinct word-n-gram shingling over a raw UTF8String.
@@ -561,12 +561,14 @@ object CosineExpr {
         org.apache.spark.sql.graft.ColumnShim.expression(b)))
 }
 
-/** Squared-euclidean nearest centroids of a float vector. */
+/** Squared-euclidean nearest centroids of a float or double vector. */
 object CentroidUtil {
   /** Indices of the `m` nearest centers (squared euclid, ties by lower
     * index), as an int array — primitive loops, no per-element boxing.
+    * `dbl` says the vector's elements are doubles rather than floats.
     */
-  def nearest(vec: ArrayData, centers: Array[Array[Double]], m: Int): ArrayData = {
+  def nearest(vec: ArrayData, centers: Array[Array[Double]], m: Int,
+      dbl: Boolean): ArrayData = {
     val k = centers.length
     val d2 = new Array[Double](k)
     val dim = vec.numElements()
@@ -580,7 +582,7 @@ object CentroidUtil {
         // null elements contribute nothing (consistent bucketing beats an
         // NPE from unboxing a Generic array's null slot)
         if (!vec.isNullAt(i)) {
-          val diff = vec.getFloat(i) - ctr(i)
+          val diff = (if (dbl) vec.getDouble(i) else vec.getFloat(i)) - ctr(i)
           s += diff * diff
         }
         i += 1
@@ -612,7 +614,7 @@ object CentroidUtil {
 }
 
 /** `nearest_centers(vec)`: the `m` nearest centroid ids of an
-  * array<float> vector under squared euclidean distance — the IVF
+  * array<float> or array<double> vector under squared euclidean distance — the IVF
   * assignment/probe kernel, with the centroid matrix carried as a
   * codegen reference object.
   */
@@ -624,22 +626,27 @@ case class NearestCentersExpr(child: Expression, centers: Seq[Seq[Double]], m: I
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     child.dataType match {
-      case ArrayType(org.apache.spark.sql.types.FloatType, _) =>
+      case ArrayType(FloatType | DoubleType, _) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"nearest_centers needs array<float>, got $other")
+          s"nearest_centers needs array<float> or array<double>, got $other")
     }
+
+  private lazy val dbl: Boolean = child.dataType match {
+    case ArrayType(DoubleType, _) => true
+    case _ => false
+  }
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
 
   override protected def nullSafeEval(input: Any): Any =
-    CentroidUtil.nearest(input.asInstanceOf[ArrayData], centersArr, m)
+    CentroidUtil.nearest(input.asInstanceOf[ArrayData], centersArr, m, dbl)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("ivfCenters", centersArr, "double[][]")
-    defineCodeGen(ctx, ev, c => s"graft.functions.CentroidUtil.nearest($c, $ref, $m)")
+    defineCodeGen(ctx, ev, c => s"graft.functions.CentroidUtil.nearest($c, $ref, $m, $dbl)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentersExpr =

@@ -447,17 +447,25 @@ object SimilarityOps {
     // unseen region's rows piled into a few giant cells (measured on the
     // graded 1M×dim-256 probe corpus: occupancy max/mean 30×, the direct
     // cause of the skewed-serve penalty the splitter then has to repair).
-    // A per-partition take keeps the same boundedness — each task pulls
-    // ~cap/P sampled rows and stops — while covering the whole layout;
-    // the take() closure runs once per partition at build/fit time, not
-    // in any per-row query path.
+    // The cap is split into per-partition quotas BEFORE the job
+    // ([[fitSamplePlan]]), and only partitions with a quota run: each
+    // task pulls at most its quota of sampled rows and stops, so the
+    // driver collects at most `fitSampleRows` rows at any partition
+    // count, spread evenly over the whole layout.
     val sampled: Array[org.apache.spark.sql.Row] = {
-      val df = candidates.select(col("cvec"))
-        .sample(withReplacement = false, fraction = IvfFitFraction, seed = 42L)
-      val rdd = df.rdd
-      val parts = math.max(1, rdd.getNumPartitions)
-      val perPart = math.max(1, (fitSampleRows + parts - 1) / parts)
-      rdd.mapPartitions(_.take(perPart)).collect().take(fitSampleRows)
+      val rdd = candidates.select(col("cvec"))
+        .sample(withReplacement = false, fraction = IvfFitFraction, seed = 42L).rdd
+      val parts = rdd.getNumPartitions
+      val cap = fitSampleRows
+      val plan = fitSamplePlan(parts, cap)
+      val rows = candidates.sparkSession.sparkContext.runJob(rdd,
+        (tc: org.apache.spark.TaskContext, it: Iterator[org.apache.spark.sql.Row]) =>
+          it.take(fitQuota(tc.partitionId(), parts, cap)).toArray,
+        plan.map(_._1)).flatten
+      org.apache.log4j.Logger.getLogger(getClass).info(
+        s"ivf fit sample: collected ${rows.length} rows from ${plan.length} of $parts " +
+          s"partitions (cap $cap)")
+      rows
     }
     val floor = math.min(fitSampleRows, math.max(256, nlist * 8))
     val fitRows =
@@ -466,8 +474,7 @@ object SimilarityOps {
     // null / ragged embeddings carry no fit signal and would NPE the
     // driver-local k-means — drop them from the sample (assignment still
     // buckets such rows via the kernel's guards)
-    val rawVecs = fitRows.map(r => if (r.isNullAt(0)) null else r.getSeq[Float](0))
-      .filter(_ != null)
+    val rawVecs = fitRows.map(vecOf(_, 0)).filter(_ != null)
     // accept the MAJORITY dimensionality, not the first row's: one corrupt
     // short vector appearing first would otherwise discard every
     // well-formed embedding from the fit and silently degrade centroids
@@ -475,8 +482,30 @@ object SimilarityOps {
       if (rawVecs.isEmpty) 0
       else rawVecs.groupBy(_.length).toSeq
         .maxBy { case (len, vs) => (vs.length, -len) }._1 // count, tie→smaller dim: deterministic
-    rawVecs.filter(_.length == dim0).map(_.toArray.map(_.toDouble))
+    rawVecs.filter(_.length == dim0)
   }
+
+  /** Fit-sample quota of partition `p` out of `parts`: the cap split so
+    * the quotas sum to exactly `cap`. With more partitions than `cap`,
+    * every quota is 0 or 1 and the 1s are evenly spaced over the layout.
+    */
+  private def fitQuota(p: Int, parts: Int, cap: Int): Int =
+    ((p + 1L) * cap / parts - p.toLong * cap / parts).toInt
+
+  /** (partition, quota) for every partition the fit-sample job runs. */
+  private[functions] def fitSamplePlan(parts: Int, cap: Int): IndexedSeq[(Int, Int)] =
+    (0 until parts).map(p => p -> fitQuota(p, parts, cap)).filter(_._2 > 0)
+
+  /** An embedding cell as an array of doubles, whatever the element type
+    * (`array<float>` or `array<double>`); null for a null cell. A null
+    * element reads as 0, as unboxing it always has.
+    */
+  private def vecOf(r: org.apache.spark.sql.Row, i: Int): Array[Double] =
+    if (r.isNullAt(i)) null
+    else r.getSeq[Any](i).iterator.map {
+      case n: java.lang.Number => n.doubleValue
+      case _ => 0.0
+    }.toArray
 
   private def fitCoarseCenters(
       candidates: DataFrame, // has cvec
@@ -518,7 +547,8 @@ object SimilarityOps {
   //   <indexDir>/_current      : pointer {"v":N[,"corpusVersion":V]}
   //   <indexDir>/v{N}/centroids: (cluster INT, centroid ARRAY<DOUBLE>,
   //                               mean_cos DOUBLE)   — nlist rows
-  //   <indexDir>/v{N}/assign   : (cid <id type>, cluster INT) — 1 row/vector
+  //   <indexDir>/v{N}/assign   : (cid <id type>, cluster INT, cvec, …) —
+  //                               1 row/vector, one directory per cell
   // A build stages BOTH tables under an unpublished v{N} dir and then
   // publishes with ONE atomically-visible pointer write (the same
   // rename/conditional-put primitives the snapshot log commits through),
@@ -529,10 +559,7 @@ object SimilarityOps {
   // space). Each build's assign table is a FRESH btr table, so refresh
   // txn high-water marks are build-scoped by construction — consumers may
   // restart their txn versioning after a rebuild without replayed batches
-  // silently no-op'ing against the old build's log. Pre-pointer indexes
-  // (tables directly under <indexDir>) stay readable; their first rebuild
-  // migrates them to v1 (the superseded root-level tables are left behind
-  // as garbage — drop them manually once no reader pins the old layout).
+  // silently no-op'ing against the old build's log.
   // ------------------------------------------------------------------
 
   /** Resolved state of the CURRENT index build: `root` holds the
@@ -651,21 +678,11 @@ object SimilarityOps {
             "race; the next publish repairs it)")
         fromMarker(mv)
       case (None, Some(mv)) => fromMarker(mv) // pointer lost entirely
-      case (None, None) => IvfIndexState(indexDir, 0L, None) // pre-pointer layout
+      // no build yet: v0 holds no tables, so readers fail loudly on them;
+      // the first build claims v1
+      case (None, None) => IvfIndexState(s"$indexDir/v0", 0L, None)
     }
   }
-
-  /** Per-session drift telemetry of the last [[ivfIndexAppend]]:
-    * (rowsAssigned, driftRatio) where driftRatio = the increment's mean
-    * cosine-to-assigned-centroid over the build-time mean. A ratio well
-    * below 1 means the corpus distribution has drifted off the centroids
-    * (time to re-fit); surfaced loudly below 0.8. Weak keys: the value is
-    * session-free, so a stopped-and-dropped session's entry collects with
-    * it instead of pinning the session for the driver's lifetime.
-    */
-  val lastIvfDrift: java.util.Map[org.apache.spark.sql.SparkSession, (Long, Double)] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, (Long, Double)]())
 
   private[graft] def centroidsOf(spark: org.apache.spark.sql.SparkSession, indexDir: String)
       : Seq[(Int, Seq[Double], Double)] =
@@ -679,8 +696,7 @@ object SimilarityOps {
     * the centers) caches keyed on the build root PLUS the marker's
     * (mtime, length) stamp: a delete-and-recreate of the same v{N} path
     * (test fixtures, a full index wipe + rebuild) changes the stamp and
-    * misses. Pre-pointer layouts and unpublished stages have no marker
-    * and are never cached. Bounded: the map clears past 128 builds.
+    * misses. Unpublished stages have no marker and are never cached. Bounded: the map clears past 128 builds.
     */
   private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[
@@ -691,13 +707,13 @@ object SimilarityOps {
     centroidsWithMarkerAt(spark, root)._1
 
   /** Centroid rows plus the published marker BODY they were resolved
-    * under (None for unpublished stages / pre-pointer layouts). The body
+    * under (None for unpublished stages). The body
     * carries the base nlist a split build was fitted at — the serving
     * paths need it to honor the caller's probed-cell-share contract
     * ([[effectiveNprobe]]) — and it was already being read here as the
     * cache key, so returning it costs nothing extra.
     */
-  private def centroidsWithMarkerAt(
+  private[graft] def centroidsWithMarkerAt(
       spark: org.apache.spark.sql.SparkSession, root: String)
       : (Seq[(Int, Seq[Double], Double)], Option[String]) = {
     def load(): Seq[(Int, Seq[Double], Double)] =
@@ -771,7 +787,7 @@ object SimilarityOps {
 
   /** Shape `(cid, cluster, cvec[array<double|float>])` rows into the
     * assign-table layout for a storage precision:
-    *  - f64: `(cid, cluster, cvec: array<double>)` (the legacy layout)
+    *  - f64: `(cid, cluster, cvec: array<double>)` (the default)
     *  - f32: `(cid, cluster, cvec: array<float>)` — 2× fewer vector bytes
     *  - i8:  `(cid, cluster, q8: binary, qs, qo, qn: double,
     *          cvec: array<float>)` — 1 byte/dim quantized codes for the
@@ -800,7 +816,7 @@ object SimilarityOps {
     }
 
   /** Current build's layout, for rebuilds that must PRESERVE it:
-    * (storeVectors, vectorStorage, nlist). A drift- or verb-triggered
+    * (vectorStorage, nlist). A drift- or verb-triggered
     * rebuild that re-ran with the build defaults would silently
     * downgrade an i8/f32 index to f64 (and reset nlist) — the serving
     * path keeps working (it dispatches on the assign schema), so
@@ -808,9 +824,8 @@ object SimilarityOps {
     * discarded and the quantized layout's serve-I/O win evaporated.
     */
   private[graft] def ivfIndexLayoutOf(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String): (Boolean, String, Int) = {
-    val schema = spark.read.format("btr").load(ivfIndexAssignPath(indexDir)).schema
-    val store = schema.fieldNames.contains("cvec")
+      spark: org.apache.spark.sql.SparkSession, indexDir: String): (String, Int) = {
+    val st = ivfIndexState(indexDir)
     // prefer the marker-recorded BASE nlist (round 22): a split build's
     // centroid count exceeds the fitted cell count, and a rebuild that
     // inherited the centroid count would ratchet nlist upward every
@@ -818,15 +833,14 @@ object SimilarityOps {
     // the centroid count (exact for unsplit builds, which is all of them
     // before the splitter existed).
     val baseNlist = {
-      val st = ivfIndexState(indexDir)
       val marker = new org.apache.hadoop.fs.Path(s"${st.root}/$PublishedMarker")
       val fs = marker.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
       readSmallFile(fs, marker).flatMap {
         case PtrNlist(n) => Some(n.toInt)
         case _ => None
-      }.getOrElse(centroidsOf(spark, indexDir).length)
+      }.getOrElse(centroidsAt(spark, st.root).length)
     }
-    (store, if (store) storageOf(schema) else "f64", baseNlist)
+    (storageOf(assignAt(spark, st.root).schema), baseNlist)
   }
 
   /** Storage precision an existing assign table was written with. */
@@ -851,10 +865,9 @@ object SimilarityOps {
     * keeps ONE prior build so a reader that resolved the pointer just
     * before a rebuild finishes its query against intact tables). Staged-
     * but-unpublished builds ABOVE the pointer (a rebuild in flight) are
-    * never touched. Once a versioned build is current, the pre-pointer
-    * layout's root-level tables are superseded and dropped too. Returns
-    * the number of directories removed — the retention companion every
-    * overwrite-by-version layout needs, same role as table VACUUM.
+    * never touched. Returns the number of directories removed — the
+    * retention companion every overwrite-by-version layout needs, same
+    * role as table VACUUM.
     *
     * READER SAFETY: `keepLast = 2` (the default) is the two-builds-
     * retained contract — a reader (query, drift probe, staleness probe)
@@ -875,7 +888,6 @@ object SimilarityOps {
           "rebuild published will fail mid-scan; keepLast=2 is the safe default")
     val (fs, root) = indexFs(indexDir)
     val st = ivfIndexState(indexDir)
-    if (st.buildVersion == 0) return 0 // pre-pointer layout: nothing versioned
     val vdirs = fs.listStatus(root).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.matches("v\\d+"))
       .map(s => (s.getPath.getName.substring(1).toLong, s.getPath))
@@ -894,10 +906,6 @@ object SimilarityOps {
     var dropped = 0
     vdirs.foreach { case (n, p) =>
       if (n < st.buildVersion && !keep.contains(n) && fs.delete(p, true)) dropped += 1
-    }
-    Seq("centroids", "assign").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(root, t)
-      if (fs.exists(p) && fs.delete(p, true)) dropped += 1
     }
     dropped
   }
@@ -1019,9 +1027,7 @@ object SimilarityOps {
         .collect()
         .groupBy(_.getInt(0))
         .map { case (c, rows) =>
-          c -> rows.map(_.getSeq[Float](1))
-            .filter(v => v != null && v.length == dim0)
-            .map(_.toArray.map(_.toDouble))
+          c -> rows.map(vecOf(_, 1)).filter(v => v != null && v.length == dim0)
         }
     }
     val finalCenters = scala.collection.mutable.ArrayBuffer.empty[Seq[Double]]
@@ -1057,17 +1063,14 @@ object SimilarityOps {
     * current); false when a concurrent rebuild published a higher build
     * first and this one was abandoned unpublished (see the guard below).
     *
-    * IVF-FLAT layout (`storeVectors = true`, the default): the assign
-    * table carries the vector alongside the cell id —
-    * `(cid, cluster, cvec)` — and is identity-partitioned on `cluster`
-    * unless the caller supplies `assignPartitionSpec`. Serving then reads
-    * ONLY the probed cells' partition directories ([[ivfTopKIndexed]],
-    * [[ivfTopKServe]]): per-query-batch I/O is proportional to
-    * nprobe/nlist of the corpus, not the corpus — the property that makes
-    * a persisted index cheaper than a per-call fit at 100 TB rather than
-    * merely amortized. `storeVectors = false` writes the legacy
-    * `(cid, cluster)` membership layout (half the index bytes; serving
-    * joins back to the corpus for vectors, an O(corpus) read per batch).
+    * IVF-FLAT layout: the assign table carries the vector alongside the
+    * cell id — `(cid, cluster, cvec)` — and is identity-partitioned on
+    * `cluster` unless the caller supplies `assignPartitionSpec`. Serving
+    * then reads ONLY the probed cells' partition directories
+    * ([[ivfTopKIndexed]], [[ivfTopKServe]]): per-query-batch I/O is
+    * proportional to nprobe/nlist of the corpus, not the corpus — the
+    * property that makes a persisted index cheaper than a per-call fit at
+    * 100 TB rather than merely amortized.
     */
   def ivfIndexBuild(
       candidates: DataFrame, // (cid, cvec)
@@ -1079,9 +1082,8 @@ object SimilarityOps {
       // in the pointer so a change-feed refresh can drop events the build
       // already reflects (rebuild/replay overlap convergence)
       corpusVersion: Option[Long] = None,
-      storeVectors: Boolean = true,
       // stored-vector precision (VERDICT r18 top item — serve I/O is
-      // index bytes per probed cell): "f64" = array<double> (legacy
+      // index bytes per probed cell): "f64" = array<double> (the
       // default), "f32" = array<float> (half the vector bytes, ranking
       // unchanged), "i8" = per-vector scalar-quantized codes ranked by
       // quantized dot + exact re-rank over a float32 copy (the ranking
@@ -1097,8 +1099,6 @@ object SimilarityOps {
   ): Boolean = {
     require(VectorStorages.contains(vectorStorage),
       s"ivfIndexBuild: vectorStorage must be one of ${VectorStorages.mkString("/")}, got $vectorStorage")
-    require(storeVectors || vectorStorage == "f64",
-      "ivfIndexBuild: a quantized layout stores vectors — storeVectors=false only combines with f64")
     require(maxCellOccupancyFactor > 1.0 && minCellSplitRows >= 0,
       s"ivfIndexBuild: maxCellOccupancyFactor must exceed 1 (got $maxCellOccupancyFactor)")
     val spark = candidates.sparkSession
@@ -1151,12 +1151,6 @@ object SimilarityOps {
           case None => progressing = false
           case Some((fc, targets)) =>
             val splits = targets.filter(_.subCenters.isDefined)
-            org.apache.log4j.Logger.getLogger(getClass).warn(
-              s"ivfIndexBuild: level-$level split of ${splits.length} oversized " +
-                s"cell(s) (occupancy > max($maxCellOccupancyFactor× base mean, " +
-                s"$minCellSplitRows rows)) into " +
-                s"${splits.map(_.subCenters.get.length).sum} sub-cells — " +
-                s"${fc.length} cells now (base nlist $nlist is what rebuilds inherit)")
             // renumber unsplit cells by lookup; re-assign ONLY split
             // cells' rows among their sub-centers (the when-chain guards
             // the kernel to those rows). One map-only projection over
@@ -1179,15 +1173,29 @@ object SimilarityOps {
             val st = re.groupBy("cluster")
               .agg(count(lit(1)).as("n"), avg(col("cos_c")).as("mean_cos"))
               .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2))).toMap
-            // stop when the worst cell stopped shrinking (degenerate
-            // geometry: re-splitting would add centroids for nothing)
+            // a level that did not shrink the worst cell (degenerate
+            // geometry) is discarded: its extra centroids buy nothing, so
+            // the previous level's layout is the one published
             val prevMax = curStats.values.map(_._1).max
             val newMax = st.values.map(_._1).max
-            progressing = newMax < prevMax
-            curCenters = fc
-            curDf = re
-            curStats = st
-            level += 1
+            val log = org.apache.log4j.Logger.getLogger(getClass)
+            if (newMax < prevMax) {
+              log.warn(
+                s"ivfIndexBuild: level-$level split of ${splits.length} oversized " +
+                  s"cell(s) (occupancy > max($maxCellOccupancyFactor× base mean, " +
+                  s"$minCellSplitRows rows)) into " +
+                  s"${splits.map(_.subCenters.get.length).sum} sub-cells — " +
+                  s"${fc.length} cells now (base nlist $nlist is what rebuilds inherit)")
+              curCenters = fc
+              curDf = re
+              curStats = st
+              level += 1
+            } else {
+              log.warn(
+                s"ivfIndexBuild: level-$level split left the worst cell at $newMax rows " +
+                  s"(was $prevMax) — discarding it and keeping ${curCenters.length} cells")
+              progressing = false
+            }
         }
       }
       val (finalCenters, assignedFinal, meanByCluster) =
@@ -1199,15 +1207,10 @@ object SimilarityOps {
         .coalesce(1)
         .write.format("btr").mode("overwrite").save(s"$target/centroids")
       ivfBuildInjectMid()
-      val body =
-        if (storeVectors)
-          assignProjection(
-            assignedFinal.select(col("cid"), col("cluster"), col("cvec")), vectorStorage)
-        else assignedFinal.select(col("cid"), col("cluster"))
-      val spec =
-        if (assignPartitionSpec.nonEmpty) assignPartitionSpec
-        else if (storeVectors) Seq("cluster") // IVF-flat: one dir per cell
-        else Nil
+      val body = assignProjection(
+        assignedFinal.select(col("cid"), col("cluster"), col("cvec")), vectorStorage)
+      // IVF-flat: one dir per cell unless the caller picks the layout
+      val spec = if (assignPartitionSpec.nonEmpty) assignPartitionSpec else Seq("cluster")
       // no explicit repartition: the btr write itself REQUIRES a
       // clustered distribution on the partition columns plus a
       // task-local sort (BtrWriteLayout — Spark plans an AQE
@@ -1216,11 +1219,10 @@ object SimilarityOps {
       // holding a single open sub-writer per task; an upstream
       // repartition here would just pay a second shuffle of the same
       // rows (IvfServeSpec pins the one-file-per-cell layout,
-      // IvfBuildHeapProbe the build's heap envelope)
-      val w = body
-        .write.format("btr").mode("overwrite")
-      (if (spec.nonEmpty) w.option("btr.partitionSpec", spec.mkString(","))
-      else w).save(s"$target/assign")
+      // `IvfProbe heap` the build's heap envelope)
+      body.write.format("btr").mode("overwrite")
+        .option("btr.partitionSpec", spec.mkString(","))
+        .save(s"$target/assign")
     } finally assigned.unpersist(blocking = true)
     ivfBuildInjectPrePublish()
     // publish: ONE atomically-visible pointer write — readers resolve the
@@ -1277,10 +1279,9 @@ object SimilarityOps {
     * the assign-table append as `btr.txnAppId`/`btr.txnVersion`, the
     * engine's own idempotent-append mechanism, so a retried or replayed
     * refresh batch commits NOTHING the second time. Without it a replay
-    * appends duplicate (cid, cluster) rows, and duplicate assign rows
-    * duplicate candidates through [[ivfTopKIndexed]]'s membership join —
-    * duplicated neighbors occupy multiple ranks and displace true top-k
-    * results. Unattended change-feed refresh loops MUST pass identity
+    * appends duplicate assign rows, and each duplicate ranks again in
+    * [[ivfTopKIndexed]] and [[ivfTopKServe]] — duplicated neighbors
+    * occupy multiple ranks and displace true top-k results. Unattended change-feed refresh loops MUST pass identity
     * (e.g. appId = the consumer name, version = the feed's to-version).
     *
     * Single kernel pass: the assigned increment is persisted so the
@@ -1315,18 +1316,13 @@ object SimilarityOps {
       .select(col("cid"), col("cluster"), col("cvec"), col("cos_c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // match the build's layout — membership (two-column), f64/f32
-      // IVF-flat, or i8 quantized (row-local quantization, so appended
-      // rows are byte-identical to what the build would have written for
-      // the same vector). The append itself follows the table's recorded
-      // partition spec.
-      val assignSchema = spark.read.format("btr").load(s"${state.root}/assign").schema
-      val body =
-        if (!assignSchema.fieldNames.contains("cvec"))
-          assigned.select(col("cid"), col("cluster"))
-        else assignProjection(
-          assigned.select(col("cid"), col("cluster"), col("cvec")), storageOf(assignSchema))
-      val w0 = body
+      // match the build's layout — f64/f32 IVF-flat or i8 quantized
+      // (row-local quantization, so appended rows are byte-identical to
+      // what the build would have written for the same vector). The
+      // append itself follows the table's recorded partition spec.
+      val w0 = assignProjection(
+          assigned.select(col("cid"), col("cluster"), col("cvec")),
+          storageOf(assignAt(spark, state.root).schema))
         .write.format("btr").mode("append")
       val w = (txnAppId, txnVersion) match {
         case (Some(app), Some(ver)) =>
@@ -1342,7 +1338,6 @@ object SimilarityOps {
         if (ms.isEmpty) 1.0 else ms.sum / ms.length
       }
       val drift = if (buildMean <= 0) 1.0 else incMean / buildMean
-      lastIvfDrift.put(spark, (n, drift))
       if (n > 0 && drift < 0.8)
         org.apache.log4j.Logger.getLogger(getClass).warn(
           f"ivfIndexAppend: increment mean centroid-cosine $incMean%.4f is " +
@@ -1376,9 +1371,9 @@ object SimilarityOps {
     * inserts and deletes (`_change_type` ∈ {'insert','delete'}, the
     * [[graft.sources.BtrChanges.between]] shape; `_commit_version` used
     * when present). Without the delete leg, assign rows for corpus rows
-    * deleted through the feed accumulate forever: harmless to the
-    * membership join (deleted cids drop out of the candidates side) but
-    * unbounded metadata debt and a drift-telemetry skew.
+    * deleted through the feed accumulate forever: [[ivfTopKIndexed]]'s
+    * ghost semi-join drops them, but [[ivfTopKServe]] serves them, and
+    * they are unbounded metadata debt and a drift-telemetry skew.
     *
     * The feed is NETTED per cid before applying — the highest
     * `_commit_version` event wins, with insert beating delete within
@@ -1505,7 +1500,6 @@ object SimilarityOps {
       indexDir: String, hw: Long, appliedTo: IvfIndexState): Unit = {
     val (fs, root) = indexFs(indexDir)
     val st = ivfIndexState(indexDir)
-    if (st.buildVersion == 0L) return // pre-pointer layout: nowhere to record
     if (st.buildVersion != appliedTo.buildVersion) {
       org.apache.log4j.Logger.getLogger(getClass).warn(
         s"advanceRefreshHighWater: refresh applied to build v${appliedTo.buildVersion} " +
@@ -1534,10 +1528,8 @@ object SimilarityOps {
     * proven, so the safe path stays on.
     */
   def ivfIndexFresh(indexDir: String, corpusDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = p.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
     val latest =
-      try graft.sources.BtrLog.latestVersion(fs, fs.makeQualified(p))
+      try graft.sources.BtrLog.latestVersionOf(corpusDir)
       catch { case _: java.io.IOException => None }
     latest match {
       case None => false
@@ -1551,7 +1543,7 @@ object SimilarityOps {
   /** Corpus-level drift probe: the mean centroid-cosine of a seeded,
     * bounded sample of `candidates` (assigned map-only against the
     * persisted centroids) over the BUILD-TIME mean — the whole-corpus
-    * analog of the per-append [[lastIvfDrift]] telemetry. ≈1 means the
+    * analog of the drift ratio [[ivfIndexAppend]] returns. ≈1 means the
     * centroids still describe the corpus; well below 1 means the
     * embedding distribution has moved and recall is degrading. One
     * bounded job: the sample is capped at `sampleRows` regardless of
@@ -1620,9 +1612,9 @@ object SimilarityOps {
       assignPartitionSpec: Seq[String] = Nil,
       sampleRows: Int = 10000,
       corpusVersion: Option[Long] = None,
-      // "inherit" = preserve the CURRENT build's storeVectors +
-      // f64/f32/i8 layout (see [[ivfIndexLayoutOf]]); an explicit
-      // storage migrates the index on this rebuild
+      // "inherit" = preserve the CURRENT build's f64/f32/i8 layout (see
+      // [[ivfIndexLayoutOf]]); an explicit storage migrates the index on
+      // this rebuild
       vectorStorage: String = "inherit"
   ): (Boolean, Double) = {
     val drift = ivfIndexDriftProbe(candidates, indexDir, sampleRows)
@@ -1630,20 +1622,11 @@ object SimilarityOps {
       org.apache.log4j.Logger.getLogger(getClass).warn(
         f"ivfIndexRebuildIfDrifted: corpus drift ratio $drift%.3f < $minDrift%.2f — " +
           "re-fitting the coarse quantizer and rebuilding the index")
-      val (curStore, curStorage, curNlist) =
-        ivfIndexLayoutOf(candidates.sparkSession, indexDir)
-      val storage = if (vectorStorage == "inherit") curStorage else vectorStorage
-      // an explicit "f64" preserves the current storeVectors: f64 is the
-      // no-quantization default a membership (vectorless) index already
-      // reports, so passing it must not silently convert the index to
-      // IVF-flat on a maintenance rebuild — only a genuinely quantized
-      // request (f32/i8, which REQUIRE stored vectors) implies storing
+      val (curStorage, curNlist) = ivfIndexLayoutOf(candidates.sparkSession, indexDir)
       ivfIndexBuild(candidates, indexDir,
         if (nlist > 0) nlist else curNlist,
         fitSampleRows, assignPartitionSpec, corpusVersion,
-        storeVectors =
-          if (vectorStorage == "inherit" || vectorStorage == "f64") curStore else true,
-        vectorStorage = storage)
+        vectorStorage = if (vectorStorage == "inherit") curStorage else vectorStorage)
       (true, drift)
     } else (false, drift)
   }
@@ -1706,12 +1689,9 @@ object SimilarityOps {
         ivfIndexRefresh(batch, indexDir,
           txnAppId = Some(appId), txnVersion = Some(batchId))
         if (driftProbeEveryBatches > 0 && batchId % driftProbeEveryBatches == 0) {
-          val p = new org.apache.hadoop.fs.Path(tableDir)
-          val fs = p.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
-          graft.sources.BtrLog.latestVersion(fs, fs.makeQualified(p)).foreach { v =>
-            val corpus = spark.read.format("btr")
-              .option("btr.versionAsOf", v.toString).load(tableDir)
-              .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
+          graft.sources.BtrLog.latestVersionOf(tableDir).foreach { v =>
+            val corpus = graft.sources.BtrIvfCommands.corpusDf(
+              spark, tableDir, idCol, vecCol, Some(v))
             ivfIndexRebuildIfDrifted(corpus, indexDir, minDrift, nlist,
               fitSampleRows, assignPartitionSpec, driftSampleRows,
               corpusVersion = Some(v), vectorStorage = vectorStorage)
@@ -1758,8 +1738,7 @@ object SimilarityOps {
     */
   val DefaultMaxStalePushdownCids = 2048
 
-  /** Shared probe machinery: (probe rows, effective nprobe, overCap,
-    * probed cluster ids when `needProbed`).
+  /** Shared probe machinery: (probe rows, overCap, probed cluster ids).
     *
     * ONE bounded job serves BOTH consumers (round 21): the broadcast-cap
     * guard and the probed-cell id set come from a single per-cluster
@@ -1767,14 +1746,12 @@ object SimilarityOps {
     * the pre-r21 shape ran a `limit+count` scan for the guard and a
     * separate `distinct().collect()` for the probed set — two extra
     * evaluations of the query subtree per serving call. A caller-capped
-    * batch with a static row-count proof (Catalyst `maxRows` ≤ cap) that
-    * does NOT need the probed set (the legacy membership layout) skips
-    * the job entirely, as before.
+    * batch with a static row-count proof (Catalyst `maxRows` ≤ cap) never
+    * drops the broadcast hint.
     */
   private def probeRows(
       queries: DataFrame, centers: Seq[Seq[Double]], nprobe: Int,
-      maxBroadcastProbes: Long, caller: String, needProbed: Boolean = false)
-      : (DataFrame, Int, Boolean, Option[Seq[Int]]) = {
+      maxBroadcastProbes: Long, caller: String): (DataFrame, Boolean, Seq[Int]) = {
     val nEff = math.min(nprobe, centers.length)
     val probes = queries.select(col("qid"), col("qvec"),
       explode(NearestCentersExpr.of(col("qvec"), centers, nEff)).as("cluster"))
@@ -1782,34 +1759,19 @@ object SimilarityOps {
     val staticMax: Option[Long] =
       try queries.queryExecution.optimizedPlan.maxRows catch { case _: Exception => None }
     val staticOk = staticMax.exists(_ <= maxQ)
-    if (staticOk && !needProbed) return (probes, nEff, false, None)
-    def warnOverCap(what: String): Unit =
-      org.apache.log4j.Logger.getLogger(getClass).warn(
-        s"$caller: $what (maxBroadcastProbes=$maxBroadcastProbes / " +
-          s"nprobe=$nEff ⇒ query cap $maxQ) — dropping the probe broadcast " +
-          "hint; AQE plans the membership join. ANN batches this large are " +
-          "usually a pipeline bug; split the query set or raise the cap " +
-          "deliberately.")
-    if (!needProbed) {
-      // guard-only path (legacy membership layout, no static row proof):
-      // an early-stopping limit probe touches at most cap+1 query rows —
-      // the pre-r21 bound, restored (VERDICT r21 #4: the merged aggregate
-      // fully evaluated an arbitrarily large misused batch just to warn)
-      val lim = (math.min(maxQ, Int.MaxValue - 1L) + 1L).toInt
-      val overCap = queries.limit(lim).count() > maxQ
-      if (overCap) warnOverCap(s"query batch exceeds $maxQ rows")
-      return (probes, nEff, overCap, None)
-    }
-    // probed set needed: ONE per-cluster aggregate serves both the guard
-    // and the probed-cell ids (≤ nlist rows collected)
     val byCluster = probes.groupBy(col("cluster")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1)))
     val totalProbes = byCluster.map(_._2).sum
     val overCap = !staticOk && totalProbes > maxBroadcastProbes
     if (overCap)
-      warnOverCap(s"query batch generates $totalProbes probe rows " +
-        s"(> $maxBroadcastProbes)")
-    (probes, nEff, overCap, Some(byCluster.map(_._1).toSeq))
+      org.apache.log4j.Logger.getLogger(getClass).warn(
+        s"$caller: query batch generates $totalProbes probe rows " +
+          s"(> $maxBroadcastProbes) (maxBroadcastProbes=$maxBroadcastProbes / " +
+          s"nprobe=$nEff ⇒ query cap $maxQ) — dropping the probe broadcast " +
+          "hint; AQE plans the probe join. ANN batches this large are " +
+          "usually a pipeline bug; split the query set or raise the cap " +
+          "deliberately.")
+    (probes, overCap, byCluster.map(_._1).toSeq)
   }
 
   /** The current build's assign table pinned to ONE snapshot version,
@@ -1824,17 +1786,22 @@ object SimilarityOps {
     * drops neighbors). Pinning makes every action — including any cache-
     * eviction recompute — observe the same snapshot, the same
     * never-a-torn-mix contract the f64 single-action path gets for free.
+    *
+    * Every reader of the stored vectors opens the table here, so this is
+    * the one place an assign table without `cvec` fails.
     */
   private def assignAt(
       spark: org.apache.spark.sql.SparkSession, idxRoot: String): DataFrame = {
     val path = s"$idxRoot/assign"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
     val reader = spark.read.format("btr")
-    graft.sources.BtrLog.latestVersion(fs, fs.makeQualified(p)) match {
+    val assign = graft.sources.BtrLog.latestVersionOf(path) match {
       case Some(v) => reader.option("btr.versionAsOf", v.toString).load(path)
       case None => reader.load(path)
     }
+    require(assign.columns.contains("cvec"),
+      s"the IVF index assign table at $path stores no vectors (cvec) — rebuild it " +
+        "with IVF BUILD INDEX (or ivfIndexBuild)")
+    assign
   }
 
   /** Rank the (cluster-matched) candidate rows per query. */
@@ -1974,9 +1941,9 @@ object SimilarityOps {
     else rankTopK(cells.select(col("cid"), col("cluster"), col("cvec")), probeSide, k)
 
   /** IVF ANN through the PERSISTED index: identical semantics to
-    * [[ivfTopK]] — `candidates` remains the membership truth — but with
-    * an IVF-flat index (assign carries `cvec`, partitioned on `cluster`)
-    * the VECTOR I/O is partition-pruned to the probed cells:
+    * [[ivfTopK]] — `candidates` remains the membership truth — but the
+    * VECTOR I/O is partition-pruned to the probed cells (the assign table
+    * carries `cvec` and is partitioned on `cluster`):
     *
     *  1. the distinct probed cluster ids (≤ nlist, driver-collected)
     *     push into the assign scan as an IN filter → only nprobe-ish
@@ -1991,10 +1958,6 @@ object SimilarityOps {
     *     touched, else the stale few fetch by id-IN pushdown and assign
     *     on the fly against the persisted centroids
     *     ([[ivfIndexStaleness]] is the monitoring probe for this debt).
-    *
-    * A legacy membership-layout index (no stored vectors) falls back to
-    * the corpus-join path: `candidates ⋈ assign` with a per-row coalesce
-    * — correct, but O(corpus) vector I/O per batch.
     *
     * Indexed rows rank by the INDEX's vector copy (bit-exact round-trip
     * of what build/refresh assigned); a corpus that mutates vectors
@@ -2034,34 +1997,23 @@ object SimilarityOps {
     val (centRows, marker) = centroidsWithMarkerAt(spark, idxRoot)
     val centers = centRows.map(_._2)
     val assign = assignAt(spark, idxRoot)
-    val flat = assign.columns.contains("cvec")
-    val (probes, nEff, overCap, probedOpt) = probeRows(
+    val (probes, overCap, probed) = probeRows(
       queries, centers,
       effectiveNprobe(nprobe, centers.length, marker, "ivfTopKIndexed"),
-      maxBroadcastProbes, "ivfTopKIndexed",
-      needProbed = flat)
+      maxBroadcastProbes, "ivfTopKIndexed")
     val probeSide = if (overCap) probes else broadcast(probes)
+    // probed cells only, from the shared probe job (≤ nlist)
+    val cells = probedCells(assign, probed)
+    // layout columns ride through membership filtering untouched —
+    // f64/f32 carry (cid, cluster, cvec); i8 adds (q8, qs, qo, qn)
+    // and [[rankCells]] dispatches to the two-stage quantized rank
+    val layoutCols = assign.columns.toSeq.map(col)
     val cb: DataFrame =
-      if (!flat) {
-        // legacy membership layout: vectors live only in the corpus
-        candidates.join(assign.select(col("cid"), col("cluster")), Seq("cid"), "left")
-          .withColumn("cluster", coalesce(col("cluster"),
-            element_at(NearestCentersExpr.of(col("cvec"), centers, 1), 1)))
+      if (trustIndex) {
+        // proven-fresh fast path: zero corpus access — membership is
+        // the index's own contents, exactly ivfTopKServe's contract
+        cells.select(layoutCols: _*)
       } else {
-        // IVF-flat: probed cells only, from the shared probe job (≤ nlist)
-        val probed: Seq[Int] = probedOpt.getOrElse(Nil)
-        val cells =
-          if (probed.isEmpty) assign.filter(lit(false))
-          else assign.filter(col("cluster").isin(probed.map(Int.box): _*))
-        // layout columns ride through membership filtering untouched —
-        // f64/f32 carry (cid, cluster, cvec); i8 adds (q8, qs, qo, qn)
-        // and [[rankCells]] dispatches to the two-stage quantized rank
-        val layoutCols = assign.columns.toSeq.map(col)
-        if (trustIndex) {
-          // proven-fresh fast path: zero corpus access — membership is
-          // the index's own contents, exactly ivfTopKServe's contract
-          cells.select(layoutCols: _*)
-        } else {
         val candIds = candidates.select(col("cid"))
         val live = cells.join(candIds, Seq("cid"), "left_semi")
           .select(layoutCols: _*)
@@ -2085,19 +2037,20 @@ object SimilarityOps {
           // (f64/f32 cast; i8 quantizes row-locally — byte-identical to
           // what a refresh would have appended for the same vector)
           val staleAssigned = assignProjection(
-            staleRows
-              .withColumn("cluster",
-                element_at(NearestCentersExpr.of(col("cvec"), centers, 1), 1))
-              .filter(if (probed.isEmpty) lit(false)
-              else col("cluster").isin(probed.map(Int.box): _*))
+            probedCells(staleRows.withColumn("cluster",
+                element_at(NearestCentersExpr.of(col("cvec"), centers, 1), 1)), probed)
               .select(col("cid"), col("cluster"), col("cvec")),
             storageOf(assign.schema))
           live.unionByName(staleAssigned)
         }
-        }
       }
     rankCells(cb, probeSide, k, rerankFactor)
   }
+
+  /** Rows of `df` whose `cluster` is one of the probed cells. */
+  private def probedCells(df: DataFrame, probed: Seq[Int]): DataFrame =
+    if (probed.isEmpty) df.filter(lit(false))
+    else df.filter(col("cluster").isin(probed.map(Int.box): _*))
 
   /** PURE-INDEX IVF serving — the flat-cost ANN path at 100 TB: the
     * IVF-flat index IS the corpus (no candidates argument), so one query
@@ -2106,8 +2059,7 @@ object SimilarityOps {
     * with zero corpus-table access. Freshness is the maintainer's
     * contract: run [[ivfIndexMaintainStream]] (or explicit refreshes) so
     * inserts/deletes/updates land in the index; [[ivfIndexStaleness]]
-    * monitors the debt. Requires an index built with vectors
-    * (`storeVectors = true`); refuses a legacy membership layout loudly.
+    * monitors the debt.
     */
   def ivfTopKServe(
       queries: DataFrame, // (qid, qvec)
@@ -2125,21 +2077,12 @@ object SimilarityOps {
     // version-pinned: the two-stage quantized rank runs multiple actions
     // over this scan; a mid-query refresh must not tear them (assignAt)
     val assign = assignAt(spark, idxRoot)
-    require(assign.columns.contains("cvec"),
-      s"ivfTopKServe: the index at $indexDir uses the legacy membership " +
-        "layout (no stored vectors) — rebuild with storeVectors=true, or " +
-        "query through ivfTopKIndexed with the corpus as candidates")
-    val (probes, _, overCap, probedOpt) = probeRows(
+    val (probes, overCap, probed) = probeRows(
       queries, centers,
       effectiveNprobe(nprobe, centers.length, marker, "ivfTopKServe"),
-      maxBroadcastProbes, "ivfTopKServe",
-      needProbed = true)
+      maxBroadcastProbes, "ivfTopKServe")
     val probeSide = if (overCap) probes else broadcast(probes)
-    val probed: Seq[Int] = probedOpt.getOrElse(Nil)
-    val cells =
-      if (probed.isEmpty) assign.filter(lit(false))
-      else assign.filter(col("cluster").isin(probed.map(Int.box): _*))
-    rankCells(cells, probeSide, k, rerankFactor)
+    rankCells(probedCells(assign, probed), probeSide, k, rerankFactor)
   }
 
   /** Embedding near-duplicate pairs: all (a,b) with cosine ≥ threshold.

@@ -1,16 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
+import graft.functions.SimilarityOps
 
-/** IVF index lifecycle as SQL VERBS (the EXPLAIN-safe surface): unlike
-  * the `ivf_index_*` TVFs — whose action runs at statement RESOLUTION,
-  * so EXPLAIN/DESCRIBE/views re-execute it — these are
-  * `LeafRunnableCommand`s executing at `run()`: `EXPLAIN IVF BUILD ...`
-  * shows the plan and builds NOTHING. Registered through the same
-  * delegating parser as OPTIMIZE/VACUUM:
+/** IVF index lifecycle as SQL verbs — the one SQL surface that changes an
+  * index. Each verb is a `LeafRunnableCommand` that executes at `run()`,
+  * so `EXPLAIN IVF BUILD ...` shows the plan and builds NOTHING, and
+  * re-analysis (DESCRIBE, views) never re-runs an action. Registered
+  * through the same delegating parser as OPTIMIZE/VACUUM:
   *
   *   IVF BUILD INDEX '/idx' FROM graft.`/t` (vec_id, embedding)
   *       [NLIST 16] [STORAGE 'f64'|'f32'|'i8']
@@ -22,9 +23,26 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType}
   *
   * Table references resolve like OPTIMIZE/VACUUM (absolute backquoted
   * path or catalog-relative); the index directory is a plain quoted
-  * string (it is a directory, not a catalog table). Action bodies are
-  * shared with the TVFs through [[graft.functions.IvfMaintenance]].
+  * string (it is a directory, not a catalog table). BUILD and REBUILD
+  * read the table's latest snapshot and record its version, so a later
+  * REFRESH converges over an overlapping feed. The read-only
+  * `ivf_index_state/staleness/fresh/drift` table functions
+  * ([[graft.GraftExtensions]]) read the corpus through the same
+  * [[BtrIvfCommands.corpusDf]].
   */
+object BtrIvfCommands {
+
+  /** The corpus table as the `(cid, cvec)` frame the index API takes,
+    * optionally read AS OF a snapshot version.
+    */
+  def corpusDf(spark: SparkSession, tableDir: String, idCol: String, vecCol: String,
+      versionAsOf: Option[Long]): DataFrame = {
+    val r0 = spark.read.format("btr")
+    val r = versionAsOf.fold(r0)(v => r0.option("btr.versionAsOf", v.toString))
+    r.load(tableDir).select(col(idCol).as("cid"), col(vecCol).as("cvec"))
+  }
+}
+
 case class BtrIvfBuildCommand(idxDir: String, tableParts: Seq[String],
     idCol: String, vecCol: String, nlist: Int, storage: String = "f64")
     extends LeafRunnableCommand {
@@ -33,9 +51,11 @@ case class BtrIvfBuildCommand(idxDir: String, tableParts: Seq[String],
     AttributeReference("corpus_version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val table = BtrMaintenance.resolvePath(spark, tableParts)
-    val (bv, cv) = graft.functions.IvfMaintenance.build(
-      spark, table, idCol, vecCol, idxDir, nlist, storage)
-    Seq(Row(bv, cv))
+    val v = BtrLog.latestVersionOf(table)
+    SimilarityOps.ivfIndexBuild(BtrIvfCommands.corpusDf(spark, table, idCol, vecCol, v),
+      idxDir, nlist = nlist, corpusVersion = v, vectorStorage = storage)
+    val st = SimilarityOps.ivfIndexState(idxDir)
+    Seq(Row(st.buildVersion, st.corpusVersion.getOrElse(-1L)))
   }
 }
 
@@ -49,12 +69,23 @@ case class BtrIvfRefreshCommand(idxDir: String, tableParts: Seq[String],
     AttributeReference("replayed", BooleanType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val table = BtrMaintenance.resolvePath(spark, tableParts)
-    val (a, d, drift, replayed) = graft.functions.IvfMaintenance.refresh(
-      spark, table, idCol, vecCol, idxDir, appId, from, to)
-    Seq(Row(a, d, drift, replayed))
+    val upTo = to.getOrElse(BtrLog.latestVersionOf(table).getOrElse(
+      throw new IllegalArgumentException(s"IVF REFRESH: no snapshot log at $table")))
+    val feed = BtrChanges.between(spark, table, from, upTo)
+      .select(col(idCol).as("cid"), col(vecCol).as("cvec"),
+        col("_change_type"), col("_commit_version"))
+    val st = SimilarityOps.ivfIndexRefresh(feed, idxDir,
+      txnAppId = Some(appId), txnVersion = Some(upTo))
+    Seq(Row(st.rowsAssigned, st.rowsDeleted, st.drift, st.replayed))
   }
 }
 
+/** Without a drift gate the rebuild is unconditional and PRESERVES the
+  * current build's layout (f64/f32/i8 storage and base nlist): a REBUILD
+  * must not silently downgrade a quantized index to the BUILD defaults.
+  * With a gate, [[SimilarityOps.ivfIndexRebuildIfDrifted]] probes first
+  * and inherits the layout the same way.
+  */
 case class BtrIvfRebuildCommand(idxDir: String, tableParts: Seq[String],
     idCol: String, vecCol: String, minDriftPct: Option[Int])
     extends LeafRunnableCommand {
@@ -64,16 +95,18 @@ case class BtrIvfRebuildCommand(idxDir: String, tableParts: Seq[String],
     AttributeReference("build_version", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val table = BtrMaintenance.resolvePath(spark, tableParts)
-    val (rebuilt, drift, bv) = minDriftPct match {
-      case Some(p) => graft.functions.IvfMaintenance.rebuildIfDrifted(
-        spark, table, idCol, vecCol, idxDir, p)
-      case None => // unconditional rebuild — inherits the build's layout
-        val (b, c) = graft.functions.IvfMaintenance.rebuild(
-          spark, table, idCol, vecCol, idxDir)
-        val _ = c
-        (true, 1.0, b)
+    val v = BtrLog.latestVersionOf(table)
+    val corpus = BtrIvfCommands.corpusDf(spark, table, idCol, vecCol, v)
+    val (rebuilt, drift) = minDriftPct match {
+      case Some(p) => SimilarityOps.ivfIndexRebuildIfDrifted(corpus, idxDir,
+        minDrift = p / 100.0, corpusVersion = v)
+      case None =>
+        val (storage, nlist) = SimilarityOps.ivfIndexLayoutOf(spark, idxDir)
+        SimilarityOps.ivfIndexBuild(corpus, idxDir,
+          nlist = nlist, corpusVersion = v, vectorStorage = storage)
+        (true, 1.0)
     }
-    Seq(Row(rebuilt, drift, bv))
+    Seq(Row(rebuilt, drift, SimilarityOps.ivfIndexState(idxDir).buildVersion))
   }
 }
 
@@ -81,5 +114,5 @@ case class BtrIvfVacuumCommand(idxDir: String, keepLast: Int) extends LeafRunnab
   override val output: Seq[Attribute] = Seq(
     AttributeReference("dropped_dirs", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(graft.functions.IvfMaintenance.vacuum(idxDir, keepLast).toLong))
+    Seq(Row(SimilarityOps.ivfIndexVacuum(idxDir, keepLast).toLong))
 }

@@ -377,6 +377,13 @@ object BtrLog {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
+  /** [[latestVersion]] of the table at `dir`. */
+  def latestVersionOf(dir: String): Option[Long] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(graft.format.BtrTableMeta.hadoopConf())
+    latestVersion(fs, fs.makeQualified(p))
+  }
+
   def readEntry(fs: FileSystem, root: Path, version: Long): Entry = {
     val p = new Path(new Path(root, LogDir), nameOf(version))
     val st =

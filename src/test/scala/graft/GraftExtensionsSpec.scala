@@ -307,11 +307,17 @@ class GraftExtensionsSpec extends AnyFunSuite {
     all.toDF("vec_id", "embedding")
       .write.format("btr").option("btr.retainRemoved", "true")
       .mode("overwrite").save(table) // v1
+    // the session was built before register(), so drive the delegating
+    // parser directly (same pattern as the OPTIMIZE tests)
+    val parser = new graft.sources.BtrSparkSqlParser(spark.sessionState.sqlParser)
+    def run(sql: String): org.apache.spark.sql.Row =
+      parser.parsePlan(sql)
+        .asInstanceOf[org.apache.spark.sql.execution.command.RunnableCommand].run(spark).head
+    val from = s"FROM graft.`$table` (vec_id, embedding)"
 
-    // BUILD via TVF ≡ Scala build with the same parameters (deterministic
+    // BUILD verb ≡ Scala build with the same parameters (deterministic
     // quantizer fit → identical centroids AND assignments)
-    val b = spark.sql(
-      s"SELECT * FROM ivf_index_build('$table', 'vec_id', 'embedding', '$idxSql', 8)").head
+    val b = run(s"IVF BUILD INDEX '$idxSql' $from NLIST 8")
     assert(b.getLong(0) == 1L && b.getLong(1) == 1L, s"build report: $b")
     val scalaCorpus = spark.read.format("btr").option("btr.versionAsOf", "1").load(table)
       .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -333,15 +339,14 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(st.getString(3) == "f64" && st.getInt(4) == 8,
       s"state TVF must report the stored-vector layout, got ${st.getString(3)}/${st.getInt(4)}")
 
-    // corpus DML → REFRESH via TVF on one index, Scala refresh on the twin
+    // corpus DML → REFRESH verb on one index, Scala refresh on the twin
     spark.sql(s"DELETE FROM graft.`$table` WHERE vec_id % 10 = 0") // v2
     val fresh = (1000L until 1015L).map(i => (i, Seq.fill(8)(rnd.nextGaussian().toFloat)))
     fresh.toDF("vec_id", "embedding").write.format("btr").mode("append").save(table) // v3
     // freshness TVF: commits the index has not applied → NOT fresh
     assert(!spark.sql(s"SELECT * FROM ivf_index_fresh('$idxSql', '$table')")
       .head.getBoolean(0), "unapplied corpus commits must read as stale")
-    val r = spark.sql("SELECT * FROM ivf_index_refresh(" +
-      s"'$table', 'vec_id', 'embedding', '$idxSql', 'sqlapp', 1, 3)").head
+    val r = run(s"IVF REFRESH INDEX '$idxSql' $from APP 'sqlapp' VERSIONS 1 TO 3")
     // rows_assigned covers the fresh appends PLUS the CoW rewrite's
     // netted-live survivors (delete+re-insert pairs); net-dead is exactly
     // the 20 removed cids
@@ -353,9 +358,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     graft.functions.SimilarityOps.ivfIndexRefresh(feed, idxScala,
       txnAppId = Some("scalaapp"), txnVersion = Some(3L))
     assert(assignOf(idxSql) == assignOf(idxScala), "SQL refresh ≡ Scala refresh")
-    // replayed batch no-ops through the TVF too
-    val replay = spark.sql("SELECT * FROM ivf_index_refresh(" +
-      s"'$table', 'vec_id', 'embedding', '$idxSql', 'sqlapp', 1, 3)").head
+    // replayed batch no-ops through the verb too
+    val replay = run(s"IVF REFRESH INDEX '$idxSql' $from APP 'sqlapp' VERSIONS 1 TO 3")
     assert(replay.getBoolean(3) && replay.getLong(0) == 0L)
 
     // ...and the refresh recorded its high-water: now provably fresh,
@@ -376,15 +380,14 @@ class GraftExtensionsSpec extends AnyFunSuite {
       sampleRows = 200)
     assert(driftSql == driftApi, s"$driftSql vs $driftApi")
 
-    // gated rebuild TVF: an impossible gate (200%) forces the rebuild and
+    // gated REBUILD verb: an impossible gate (200%) forces the rebuild and
     // the pointer advances crash-atomically
-    val rb = spark.sql("SELECT * FROM ivf_index_rebuild_if_drifted(" +
-      s"'$table', 'vec_id', 'embedding', '$idxSql', 200)").head
+    val rb = run(s"IVF REBUILD INDEX '$idxSql' $from IF DRIFT BELOW 200")
     assert(rb.getBoolean(0) && rb.getLong(2) == 2L, s"rebuild report: $rb")
     assert(graft.functions.SimilarityOps.ivfIndexState(idxSql).corpusVersion.contains(3L))
-    // retention from SQL too: keepLast=1 sweeps the superseded v1 build
-    val vac = spark.sql(s"SELECT * FROM ivf_index_vacuum('$idxSql', 1)").head
-    assert(vac.getInt(0) == 1, s"vacuum report: $vac")
+    // retention from SQL too: KEEP 1 sweeps the superseded v1 build
+    val vac = run(s"IVF VACUUM INDEX '$idxSql' KEEP 1")
+    assert(vac.getLong(0) == 1L, s"vacuum report: $vac")
     assert(!new java.io.File(idxSql, "v1").exists())
     assert(graft.functions.SimilarityOps.ivfIndexState(idxSql).buildVersion == 2L)
     // post-rebuild serving stays brute-force-exact at full probe
@@ -404,7 +407,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     val table = s"$base/corpus"
     val idx = s"$base/idx"
-    val idxTvf = s"$base/idx-tvf"
     val rnd = new scala.util.Random(11)
     val all = (0L until 200L).map(i => (i, Seq.fill(8)(rnd.nextGaussian().toFloat)))
     all.toDF("vec_id", "embedding")
@@ -419,9 +421,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       parser.parsePlan(sql)
         .asInstanceOf[org.apache.spark.sql.execution.command.RunnableCommand].run(spark)
 
-    // THE hazard the verbs exist to close: EXPLAIN of the verb plans
-    // without executing — no index appears (an EXPLAIN of the TVF form
-    // would have built one)
+    // EXPLAIN of the verb plans without executing — no index appears
     val explained = parser.parsePlan(
       s"EXPLAIN IVF BUILD INDEX '$idx' FROM graft.`$table` (vec_id, embedding) NLIST 8")
     val ex = explained.asInstanceOf[org.apache.spark.sql.execution.command.ExplainCommand]
@@ -431,17 +431,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
     assert(!new java.io.File(idx).exists(),
       "EXPLAIN of the IVF BUILD verb must not execute the build")
 
-    // executing the verb ≡ the TVF build (shared action layer)
     val b = run(
       s"IVF BUILD INDEX '$idx' FROM graft.`$table` (vec_id, embedding) NLIST 8").head
     assert(b.getLong(0) == 1L && b.getLong(1) == 1L, s"build report: $b")
-    spark.sql(s"SELECT * FROM ivf_index_build('$table', 'vec_id', 'embedding', '$idxTvf', 8)")
-      .collect()
-    def assignOf(i: String): Seq[String] =
-      spark.read.format("btr")
-        .load(graft.functions.SimilarityOps.ivfIndexAssignPath(i))
-        .collect().map(_.toString).sorted.toSeq
-    assert(assignOf(idx) == assignOf(idxTvf), "verb build ≡ TVF build")
 
     // change feed → REFRESH verb; replayed batch no-ops
     val fresh = (1000L until 1010L).map(i => (i, Seq.fill(8)(rnd.nextGaussian().toFloat)))
@@ -482,54 +474,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val exact = graft.functions.SimilarityOps.bruteForceTopK(qs, current, 3)
       .collect().map(x => (x.getAs[Long]("qid"), x.getAs[Long]("cid"))).toSet
     assert(viaIdx == exact)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-  }
-
-  test("mutation TVFs refuse under spark.graft.ivf.tvfMutations=refuse; read-only TVFs unaffected") {
-    // VERDICT r19 #6: the mutation TVFs execute at statement RESOLUTION
-    // (EXPLAIN/views re-run the action). Default mode warns-once and
-    // executes (every earlier test in this suite relies on it); the
-    // refuse mode must fail the statement BEFORE any action runs, naming
-    // the EXPLAIN-safe verb, and must not touch the read-only TVFs.
-    val base = "/tmp/btr-ext-spec/tvf-refuse"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-    val table = s"$base/corpus"
-    val idx = s"$base/idx"
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    (0L until 50L).map(i => (i, Seq.fill(6)(rnd.nextGaussian().toFloat)))
-      .toDF("vec_id", "embedding")
-      .write.format("btr").mode("overwrite").save(table)
-    spark.conf.set("spark.graft.ivf.tvfMutations", "refuse")
-    try {
-      val e = intercept[IllegalStateException] {
-        spark.sql(s"SELECT * FROM ivf_index_build('$table', 'vec_id', 'embedding', '$idx', 4)")
-      }
-      assert(e.getMessage.contains("IVF BUILD INDEX"),
-        s"refusal must name the EXPLAIN-safe verb, got: ${e.getMessage}")
-      assert(!new java.io.File(idx).exists(),
-        "the refused build must not have staged anything")
-      intercept[IllegalStateException] {
-        spark.sql(s"SELECT * FROM ivf_index_vacuum('$idx')")
-      }
-      intercept[IllegalStateException] {
-        spark.sql("SELECT * FROM ivf_index_refresh(" +
-          s"'$table', 'vec_id', 'embedding', '$idx', 'app', 1)")
-      }
-      intercept[IllegalStateException] {
-        spark.sql(s"SELECT * FROM ivf_index_rebuild_if_drifted('$table', 'vec_id', 'embedding', '$idx')")
-      }
-      // the verb surface stays OPEN under refuse (it is the alternative)
-      val parser = new graft.sources.BtrSparkSqlParser(spark.sessionState.sqlParser)
-      spark.conf.set("spark.sql.catalog.graft", classOf[graft.sources.BtrCatalog].getName)
-      val bv = parser.parsePlan(
-        s"IVF BUILD INDEX '$idx' FROM graft.`$table` (vec_id, embedding) NLIST 4")
-        .asInstanceOf[graft.sources.BtrIvfBuildCommand].run(spark).head.getLong(0)
-      assert(bv == 1L, s"the IVF BUILD verb must run under refuse mode, got v$bv")
-      // read-only TVFs keep working under refuse
-      assert(spark.sql(s"SELECT * FROM ivf_index_state('$idx')").count() == 1L)
-      assert(spark.sql(s"SELECT * FROM ivf_index_fresh('$idx', '$table')").count() == 1L)
-    } finally spark.conf.unset("spark.graft.ivf.tvfMutations")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
   }
 }

@@ -12,7 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * occupancy, ranking stays EXACT at full probe, serve ≡ indexed
   * row-identity holds on a split index, appends land in sub-cells,
   * rebuilds inherit the BASE nlist, and the absolute floor keeps small
-  * (gate-sized) corpora building identically to the unsplit layout.
+  * (gate-sized) corpora building identically to the unsplit layout. A
+  * split level that does not shrink the worst cell is discarded, split
+  * builds read `array<double>` corpora, and the quantizer's fit sample
+  * collects at most `fitSampleRows` rows at any partition count.
   */
 class IvfCellSplitSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -52,6 +55,32 @@ class IvfCellSplitSpec extends AnyFunSuite {
     spark.read.format("btr").load(SimilarityOps.ivfIndexAssignPath(dir))
       .groupBy("cluster").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+  /** SimilarityOps log messages at `level` or above while `body` runs. */
+  private def logged(level: org.apache.log4j.Level)(body: => Unit): Seq[String] = {
+    val logger = org.apache.log4j.Logger.getLogger(SimilarityOps.getClass)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new org.apache.log4j.AppenderSkeleton {
+      override def append(e: org.apache.log4j.spi.LoggingEvent): Unit =
+        events.add(String.valueOf(e.getMessage))
+      override def close(): Unit = {}
+      override def requiresLayout(): Boolean = false
+    }
+    val prevLevel = logger.getLevel
+    logger.setLevel(level)
+    logger.addAppender(app)
+    try body
+    finally {
+      logger.removeAppender(app)
+      logger.setLevel(prevLevel)
+    }
+    import scala.jdk.CollectionConverters._
+    events.asScala.toSeq
+  }
+
+  private def assignRows(dir: String): Seq[String] =
+    spark.read.format("btr").load(SimilarityOps.ivfIndexAssignPath(dir))
+      .select("cid", "cluster").collect().map(_.toString).sorted.toSeq
 
   test("an oversized cell splits; occupancy bounds; ranking stays exact; appends inherit") {
     val dir = tmp("split")
@@ -94,7 +123,7 @@ class IvfCellSplitSpec extends AnyFunSuite {
     assert(occ2.keySet.subsetOf((0 until cents.length).toSet),
       "appends must assign into the FINAL cell id space")
     // rebuilds inherit the BASE nlist, not the split centroid count
-    val (_, _, baseNlist) = SimilarityOps.ivfIndexLayoutOf(spark, dir)
+    val (_, baseNlist) = SimilarityOps.ivfIndexLayoutOf(spark, dir)
     assert(baseNlist == 4, s"layoutOf must report the base nlist, got $baseNlist")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
@@ -124,29 +153,14 @@ class IvfCellSplitSpec extends AnyFunSuite {
     val qs = df(corpus).filter(col("cid") < 3)
       .select(col("cid").as("qid"), col("cvec").as("qvec"))
     // capture the scaling log line while serving at the caller's nprobe=1
-    val logger = org.apache.log4j.Logger.getLogger(SimilarityOps.getClass)
-    val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val app = new org.apache.log4j.AppenderSkeleton {
-      override def append(e: org.apache.log4j.spi.LoggingEvent): Unit =
-        events.add(String.valueOf(e.getMessage))
-      override def close(): Unit = {}
-      override def requiresLayout(): Boolean = false
-    }
-    val prevLevel = logger.getLevel
-    logger.setLevel(org.apache.log4j.Level.INFO)
-    logger.addAppender(app)
-    try {
+    val events = logged(org.apache.log4j.Level.INFO) {
       SimilarityOps.ivfTopKServe(qs, dir, k = 3, nprobe = 1)
         .write.mode("overwrite").format("noop").save()
-    } finally {
-      logger.removeAppender(app)
-      logger.setLevel(prevLevel)
     }
-    import scala.jdk.CollectionConverters._
     val expectEff = (cents.length + 3) / 4 // ceil(1 x cells / base 4)
-    assert(events.asScala.exists(_.contains(
+    assert(events.exists(_.contains(
       s"nprobe 1 scaled to $expectEff on a split build (${cents.length} cells from base nlist 4)")),
-      s"expected the share-contract scaling log; got: ${events.asScala.toList}")
+      s"expected the share-contract scaling log; got: $events")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
@@ -180,6 +194,80 @@ class IvfCellSplitSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
     assert(served == exact,
       "split i8 serve must match brute force at full probe on separated queries")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("a split level that does not shrink the worst cell is discarded") {
+    // 800 IDENTICAL vectors far from 200 spread ones: the blob is one
+    // oversized cell, every sub-center fitted inside it is the same
+    // point, and the nearest-center tie-break puts all 800 rows back in
+    // one sub-cell. That level adds centroids and shrinks nothing, so the
+    // build must publish the level before it — here the unsplit layout.
+    val rnd = new scala.util.Random(5)
+    val blob = (0L until 800L).map(i => i -> Seq.fill(Dim)(100f))
+    val spread = (800L until 1000L).map(i => i -> Seq.fill(Dim)(rnd.nextGaussian().toFloat))
+    val corpus = df(blob ++ spread)
+    val split = tmp("nonshrink")
+    val plain = tmp("nonshrink-plain")
+    SimilarityOps.ivfIndexBuild(corpus, plain, nlist = 4, fitSampleRows = 1000,
+      maxCellOccupancyFactor = Double.MaxValue)
+    // precondition: the unsplit layout's worst cell is exactly the blob
+    assert(occupancy(plain).values.max == 800L, s"got ${occupancy(plain)}")
+    val logs = logged(org.apache.log4j.Level.WARN) {
+      SimilarityOps.ivfIndexBuild(corpus, split, nlist = 4, fitSampleRows = 1000,
+        maxCellOccupancyFactor = 2.0, minCellSplitRows = 100L)
+    }
+    assert(SimilarityOps.centroidsOf(spark, split) == SimilarityOps.centroidsOf(spark, plain),
+      "a non-shrinking level must not publish its centroids")
+    assert(assignRows(split) == assignRows(plain), "… nor its assignment")
+    assert(logs.exists(_.contains("discarding it")), s"expected the discard warning: $logs")
+    Seq(split, plain).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+  }
+
+  test("a split build reads an array<double> corpus") {
+    val dir = tmp("split-double")
+    val rows = skewedCorpus().map { case (i, v) => (i, v.map(_.toDouble)) }
+    val full = rows.toDF("cid", "cvec")
+    SimilarityOps.ivfIndexBuild(full, dir, nlist = 4, fitSampleRows = 1000,
+      maxCellOccupancyFactor = 2.0, minCellSplitRows = 100L)
+    val cents = SimilarityOps.centroidsOf(spark, dir)
+    assert(cents.length > 4, s"expected a split (> 4 cells), got ${cents.length}")
+    val qs = full.filter(col("cid") < 3 || col("cid") >= 998L)
+      .select(col("cid").as("qid"), col("cvec").as("qvec"))
+    val served = SimilarityOps.ivfTopKServe(qs, dir, k = 3, nprobe = cents.length)
+      .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
+    val exact = SimilarityOps.bruteForceTopK(qs, full, 3)
+      .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
+    assert(served == exact)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
+
+  test("the fit sample collects at most fitSampleRows rows at any partition count") {
+    // the quotas are planned before any job: they sum to the cap, and
+    // with more partitions than the cap the chosen ones span the layout
+    for ((parts, cap) <- Seq((4, 10000), (200, 64), (1000000, 10000))) {
+      val plan = SimilarityOps.fitSamplePlan(parts, cap)
+      assert(plan.map(_._2).sum == cap && plan.length == math.min(parts, cap))
+      assert(plan.head._1 <= parts / cap && plan.last._1 == parts - 1, s"$parts/$cap")
+    }
+    // 200 partitions of 300 rows, more partitions than fitSampleRows = 64;
+    // a vector's first component is its partition index
+    val dir = tmp("fit-partitions")
+    val corpus = spark.range(0L, 60000L, 1L, 200).select(col("id").as("cid"),
+      array((col("id") / 300).cast("int").cast("float"), lit(1f), lit(0f), lit(0f)).as("cvec"))
+    val logs = logged(org.apache.log4j.Level.INFO) {
+      SimilarityOps.ivfIndexBuild(corpus, dir, nlist = 4, fitSampleRows = 64)
+    }
+    // the sample spans every region of the layout, not the leading
+    // partitions: some center sits in the last third of partition indexes
+    val top = SimilarityOps.centroidsOf(spark, dir).map(_._2.head).max
+    assert(top > 133.0, s"centers stay in the leading partitions (max ${top})")
+    val Collected = """ivf fit sample: collected (\d+) rows from (\d+) of (\d+) partitions.*""".r
+    val (rows, used, parts) = logs.collectFirst {
+      case Collected(r, u, p) => (r.toInt, u.toInt, p.toInt)
+    }.getOrElse(fail(s"no fit-sample report in $logs"))
+    assert(parts == 200 && used == 64 && rows <= 64, s"collected $rows rows from $used/$parts")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }

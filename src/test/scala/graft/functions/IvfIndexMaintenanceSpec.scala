@@ -219,53 +219,6 @@ class IvfIndexMaintenanceSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
-  test("legacy-layout guard: over-cap batch warns through the BOUNDED limit probe") {
-    // VERDICT r21 #4 / ADVICE r21: with needProbed = false (membership
-    // layout) and no static row proof, the guard must take the
-    // early-stopping limit probe — never the full per-cluster aggregate
-    // whose cost is O(batch). The two paths warn with distinct texts, so
-    // capturing the log proves which one ran.
-    val dir = tmp("guard-legacy")
-    val corpus = randVecs(0L until 150L, seed = 23)
-    SimilarityOps.ivfIndexBuild(df(corpus), dir, nlist = 8, fitSampleRows = 100,
-      storeVectors = false)
-    val full = df(corpus)
-    // strip the static maxRows proof with a non-limiting filter
-    val qs = full.filter(col("cid") < 6 && length(col("cid").cast("string")) >= 0)
-      .select(col("cid").as("qid"), col("cvec").as("qvec"))
-    val messages = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val appender = new org.apache.log4j.AppenderSkeleton {
-      override def append(ev: org.apache.log4j.spi.LoggingEvent): Unit = {
-        messages.add(String.valueOf(ev.getMessage)); ()
-      }
-      override def close(): Unit = ()
-      override def requiresLayout(): Boolean = false
-    }
-    val logger = org.apache.log4j.Logger.getLogger(SimilarityOps.getClass)
-    val prevLevel = logger.getLevel
-    logger.setLevel(org.apache.log4j.Level.WARN)
-    logger.addAppender(appender)
-    try {
-      val guarded = SimilarityOps.ivfTopKIndexed(qs, full, dir, k = 3, nprobe = 8,
-        maxBroadcastProbes = 1L)
-      val rows = guarded.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(rows.nonEmpty)
-      import scala.jdk.CollectionConverters._
-      val warns = messages.asScala.filter(_.contains("ivfTopKIndexed"))
-      assert(warns.exists(_.contains("query batch exceeds")),
-        s"expected the bounded limit-probe warning, got: $warns")
-      assert(!warns.exists(_.contains("probe rows")),
-        "the legacy-layout guard must not run the full probe aggregate")
-      val exact = SimilarityOps.bruteForceTopK(qs, full, 3)
-        .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
-      assert(rows == exact, "guarded legacy path must still rank exactly (full probe)")
-    } finally {
-      logger.removeAppender(appender)
-      logger.setLevel(prevLevel)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("centroid cache: a wipe + rebuild at the same v1 serves the NEW centroids") {
     // ADVICE r21 (medium): the cache keyed on the marker's (mtime, length)
     // alone — a full index wipe + rebuild reuses v1 with an identical-
@@ -583,22 +536,7 @@ class IvfIndexMaintenanceSpec extends AnyFunSuite {
     val exact = SimilarityOps.bruteForceTopK(qs, df(corpus), 3)
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
     assert(viaIdx == exact)
-    // legacy migration debris: a pre-pointer index rebuilt once leaves the
-    // root-level tables behind; vacuum sweeps them
-    val legacy = tmp("vacuum-legacy")
-    SimilarityOps.ivfIndexBuild(df(corpus), legacy, nlist = 4, fitSampleRows = 100)
-    // fake the legacy layout: copy the v1 tables to the root, drop pointer
-    val fsRoot = new java.io.File(legacy)
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(fsRoot, "v1/centroids"), new java.io.File(fsRoot, "centroids"))
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(fsRoot, "v1/assign"), new java.io.File(fsRoot, "assign"))
-    assert(SimilarityOps.ivfIndexVacuum(legacy, keepLast = 1) == 2,
-      "root-level legacy tables are superseded once a versioned build is current")
-    assert(!new java.io.File(fsRoot, "centroids").exists())
-    assert(SimilarityOps.centroidsOf(spark, legacy).nonEmpty)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(legacy))
   }
 
   test("maintenance fuzz: appends × replays × assign-table compaction stay exactly-once") {
@@ -851,10 +789,9 @@ class IvfIndexMaintenanceSpec extends AnyFunSuite {
 
   test("absent _current resolves the highest PUBLISHED build, never the swept root") {
     // On stores whose rename refuses to clobber, the pointer republish is
-    // delete-then-rename: a reader racing the gap sees NO _current. The
-    // legacy-layout fallback would resolve root-level tables — swept by
-    // any vacuum — so state resolution must fall back to the highest
-    // once-published v-dir instead.
+    // delete-then-rename: a reader racing the gap sees NO _current, so
+    // state resolution must fall back to the highest once-published v-dir
+    // instead of reading as "no build yet".
     val dir = tmp("absent-pointer")
     val corpus = randVecs(0L until 150L, seed = 111)
     SimilarityOps.ivfIndexBuild(df(corpus), dir, nlist = 4, fitSampleRows = 100) // v1
@@ -874,22 +811,22 @@ class IvfIndexMaintenanceSpec extends AnyFunSuite {
     val exact = SimilarityOps.bruteForceTopK(qs, df(corpus), 3)
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("cid"))).toSet
     assert(viaIdx == exact)
-    // a true pre-pointer table (no v-dirs at all) still resolves the root
-    val legacy = tmp("absent-pointer-legacy")
-    SimilarityOps.ivfIndexBuild(df(corpus), legacy, nlist = 4, fitSampleRows = 100)
-    val lf = new java.io.File(legacy)
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(lf, "v1/centroids"), new java.io.File(lf, "centroids"))
-    org.apache.commons.io.FileUtils.copyDirectory(
-      new java.io.File(lf, "v1/assign"), new java.io.File(lf, "assign"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(lf, "v1"))
-    assert(new java.io.File(lf, "_current").delete())
-    val lst = SimilarityOps.ivfIndexState(legacy)
-    assert(lst.buildVersion == 0L && !lst.root.matches(".*/v\\d+$"),
-      s"no published v-dirs: the pre-pointer root layout is the truth, got $lst")
-    assert(SimilarityOps.centroidsOf(spark, legacy).nonEmpty)
+    // no pointer and no published v-dir is "no build yet": tables at the
+    // index root are never read, and the next build claims v1
+    val empty = tmp("absent-pointer-empty")
+    SimilarityOps.ivfIndexBuild(df(corpus), empty, nlist = 4, fitSampleRows = 100)
+    val ef = new java.io.File(empty)
+    Seq("centroids", "assign").foreach(t => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(ef, s"v1/$t"), new java.io.File(ef, t)))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ef, "v1"))
+    assert(new java.io.File(ef, "_current").delete())
+    val est = SimilarityOps.ivfIndexState(empty)
+    assert(est.buildVersion == 0L && est.root.endsWith("/v0"), s"no build yet, got $est")
+    intercept[Exception](SimilarityOps.centroidsOf(spark, empty))
+    SimilarityOps.ivfIndexBuild(df(corpus), empty, nlist = 4, fitSampleRows = 100)
+    assert(SimilarityOps.ivfIndexState(empty).buildVersion == 1L)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(legacy))
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(empty))
   }
 
   test("null _commit_version events still APPLY after a rebuild records corpusVersion") {

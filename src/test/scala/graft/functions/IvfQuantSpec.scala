@@ -242,17 +242,11 @@ class IvfQuantSpec extends AnyFunSuite {
       s"IVF BUILD INDEX '${dir}_x' FROM graft.`$tableDir` (cid, cvec) STORAGE 'f32'")
       .asInstanceOf[graft.sources.BtrIvfBuildCommand].storage == "f32")
     assert(!new java.io.File(s"${dir}_x").exists(), "parsing must not build")
-    // TVF front-end parity: the optional 6th arg selects the storage and
-    // the state TVF reports the layout back
-    val tvfDir = tmp("i8-tvf-idx")
-    spark.sql(s"SELECT * FROM ivf_index_build('$tableDir', 'cid', 'cvec', " +
-      s"'$tvfDir', 8, 'i8')").collect()
-    val tvfAssign = spark.read.format("btr").load(SimilarityOps.ivfIndexAssignPath(tvfDir))
-    assert(tvfAssign.columns.contains("q8"), "TVF build must honor storage='i8'")
-    val st = spark.sql(s"SELECT storage, nlist FROM ivf_index_state('$tvfDir')").head
+    // the state table function reports the verb-built layout back
+    val st = spark.sql(s"SELECT storage, nlist FROM ivf_index_state('$dir')").head
     assert(st.getString(0) == "i8" && st.getInt(1) == 8,
       s"state TVF must report the quantized layout, got $st")
-    Seq(dir, tableDir, tvfDir).foreach(x =>
+    Seq(dir, tableDir).foreach(x =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(x)))
   }
 
@@ -295,7 +289,7 @@ class IvfQuantSpec extends AnyFunSuite {
     SimilarityOps.ivfIndexBuild(snap, dir, nlist = 4, fitSampleRows = 200,
       vectorStorage = "i8")
     def layout() = SimilarityOps.ivfIndexLayoutOf(spark, dir)
-    assert(layout() == ((true, "i8", 4)))
+    assert(layout() == (("i8", 4)))
 
     // rotate the corpus into the orthogonal half-space → drift rebuild
     val shifted = corpus.map { case (i, v) =>
@@ -304,7 +298,7 @@ class IvfQuantSpec extends AnyFunSuite {
     val (rebuilt, _) = SimilarityOps.ivfIndexRebuildIfDrifted(df(shifted), dir,
       minDrift = 0.8, fitSampleRows = 200, sampleRows = 200)
     assert(rebuilt, "orthogonal corpus must trigger the drift rebuild")
-    assert(layout() == ((true, "i8", 4)),
+    assert(layout() == (("i8", 4)),
       s"drift rebuild must inherit the i8 layout and nlist, got ${layout()}")
     // and the rebuilt index serves the shifted corpus exactly at full probe
     val qs = df(shifted.take(3)).select(col("cid").as("qid"), col("cvec").as("qvec"))
@@ -318,7 +312,7 @@ class IvfQuantSpec extends AnyFunSuite {
       s"IVF REBUILD INDEX '$dir' FROM graft.`$tableDir` (vec_id, embedding)")
       .asInstanceOf[graft.sources.BtrIvfRebuildCommand].run(spark).head.getLong(2)
     assert(bv == 3L, s"verb rebuild must stage build v3, got $bv")
-    assert(layout() == ((true, "i8", 4)),
+    assert(layout() == (("i8", 4)),
       s"REBUILD verb must inherit the i8 layout and nlist, got ${layout()}")
     // explicit storage still migrates (the override path stays available):
     // the verb rebuild re-fit on tableDir's ORIGINAL corpus, so the
@@ -326,7 +320,7 @@ class IvfQuantSpec extends AnyFunSuite {
     val (rebuilt2, _) = SimilarityOps.ivfIndexRebuildIfDrifted(
       df(shifted), dir, minDrift = 0.8, fitSampleRows = 200, sampleRows = 200,
       vectorStorage = "f32")
-    assert(rebuilt2 && layout() == ((true, "f32", 4)),
+    assert(rebuilt2 && layout() == (("f32", 4)),
       s"explicit storage must migrate on rebuild, got ${layout()}")
     Seq(dir, tableDir).foreach(x =>
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(x)))
@@ -371,39 +365,6 @@ class IvfQuantSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(x)))
   }
 
-  test("explicit f64 on a membership index preserves the vectorless layout across drift rebuild") {
-    // ADVICE r19: an explicit "f64" used to force storeVectors = true, so
-    // a maintenance loop configured with vectorStorage = "f64" silently
-    // converted a membership (vectorless) index to IVF-flat on its next
-    // drift rebuild — the exact silent-layout-change class the storage
-    // plumbing exists to prevent. f64 is the no-quantization default a
-    // membership index already reports; only f32/i8 imply stored vectors.
-    val dir = tmp("f64-membership-idx")
-    val corpus = randVecs(0L until 300L, seed = 95)
-      .map { case (i, v) => (i, v.indices.map(j => if (j < Dim / 2) v(j) else 0f).toSeq) }
-    SimilarityOps.ivfIndexBuild(df(corpus), dir, nlist = 4, fitSampleRows = 200,
-      storeVectors = false)
-    def layout() = SimilarityOps.ivfIndexLayoutOf(spark, dir)
-    assert(layout() == ((false, "f64", 4)))
-    val shifted = corpus.map { case (i, v) =>
-      (i, v.indices.map(j => if (j >= Dim / 2) v(j - Dim / 2) else 0f).toSeq)
-    }
-    val (rebuilt, _) = SimilarityOps.ivfIndexRebuildIfDrifted(df(shifted), dir,
-      minDrift = 0.8, fitSampleRows = 200, sampleRows = 200, vectorStorage = "f64")
-    assert(rebuilt, "orthogonal corpus must trigger the drift rebuild")
-    assert(layout() == ((false, "f64", 4)),
-      s"explicit f64 must preserve the membership layout, got ${layout()}")
-    // an explicitly QUANTIZED request still migrates (requires vectors)
-    val half = corpus.map { case (i, v) =>
-      (i, v.indices.map(j => if (j < Dim / 2) v(j) else 0f).toSeq)
-    }
-    val (rebuilt2, _) = SimilarityOps.ivfIndexRebuildIfDrifted(df(half), dir,
-      minDrift = 0.8, fitSampleRows = 200, sampleRows = 200, vectorStorage = "i8")
-    assert(rebuilt2 && layout() == ((true, "i8", 4)),
-      s"explicit i8 must migrate the membership index to quantized flat, got ${layout()}")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-  }
-
   test("quant_cos is null (never NaN) on zero-norm vectors and zero queries") {
     // ADVICE r19: 0/0 = NaN, and Spark sorts NaN above every double, so
     // a NaN score would rank zero vectors FIRST and waste the two-stage
@@ -433,12 +394,8 @@ class IvfQuantSpec extends AnyFunSuite {
       s"zero vector must sort last via null, got ${rows.mkString(", ")}")
   }
 
-  test("storeVectors=false rejects quantized storage; unknown storage rejected") {
+  test("unknown storage rejected") {
     val corpus = df(randVecs(0L until 10L, seed = 71))
-    intercept[IllegalArgumentException] {
-      SimilarityOps.ivfIndexBuild(corpus, tmp("bad1"), storeVectors = false,
-        vectorStorage = "i8")
-    }
     intercept[IllegalArgumentException] {
       SimilarityOps.ivfIndexBuild(corpus, tmp("bad2"), vectorStorage = "f16")
     }

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * corpus. Pins exactness (serve ≡ indexed ≡ brute force at full probe),
   * the partition-pruning plan shape (scanned files ∝ nprobe), the stale
   * id-IN pushdown and its over-cap degrade, ghost-row drops, and the
-  * legacy membership-layout fallbacks.
+  * loud refusal of an assign table that stores no vectors.
   */
 class IvfServeSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -159,27 +159,28 @@ class IvfServeSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
-  test("legacy membership layout: serve refuses loudly, indexed falls back exactly") {
-    val dir = tmp("serve-legacy")
+  test("an index without stored vectors fails loudly in both serve paths") {
+    val dir = tmp("serve-novec")
     val corpus = randVecs(0L until 250L, seed = 37)
-    SimilarityOps.ivfIndexBuild(df(corpus), dir, nlist = 8, fitSampleRows = 200,
-      storeVectors = false)
-    val assign = spark.read.format("btr").load(SimilarityOps.ivfIndexAssignPath(dir))
-    assert(assign.columns.toSet == Set("cid", "cluster"), "legacy layout stores no vectors")
+    SimilarityOps.ivfIndexBuild(df(corpus), dir, nlist = 8, fitSampleRows = 200)
+    // replace the assign table with a (cid, cluster)-only table, as an
+    // index written without vectors would have it
+    val assignPath = SimilarityOps.ivfIndexAssignPath(dir)
+    val membership = spark.read.format("btr").load(assignPath)
+      .select(col("cid"), col("cluster")).collect().toSeq
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(assignPath))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(membership),
+      org.apache.spark.sql.types.StructType.fromDDL("cid BIGINT, cluster INT"))
+      .write.format("btr").mode("overwrite").save(assignPath)
     val qs = df(corpus.take(3)).select(col("cid").as("qid"), col("cvec").as("qvec"))
-    val e = intercept[IllegalArgumentException] {
-      SimilarityOps.ivfTopKServe(qs, dir, k = 5, nprobe = 8)
-    }
-    assert(e.getMessage.contains("legacy membership"))
-    assert(pairs(SimilarityOps.ivfTopKIndexed(qs, df(corpus), dir, k = 5, nprobe = 8)) ==
-      pairs(SimilarityOps.bruteForceTopK(qs, df(corpus), 5)))
-    // a refresh against the legacy layout keeps the two-column shape
-    val inc = randVecs(500L until 520L, seed = 38)
-    val (n, _) = SimilarityOps.ivfIndexAppend(df(inc), dir)
-    assert(n == inc.length.toLong)
-    val after = spark.read.format("btr").load(SimilarityOps.ivfIndexAssignPath(dir))
-    assert(after.columns.toSet == Set("cid", "cluster"))
-    assert(after.count() == (corpus.length + inc.length).toLong)
+    val failures = Seq(
+      intercept[IllegalArgumentException](SimilarityOps.ivfTopKServe(qs, dir, k = 5, nprobe = 8)),
+      intercept[IllegalArgumentException](
+        SimilarityOps.ivfTopKIndexed(qs, df(corpus), dir, k = 5, nprobe = 8)),
+      intercept[IllegalArgumentException](
+        SimilarityOps.ivfIndexAppend(df(randVecs(500L until 510L, seed = 38)), dir)))
+    failures.foreach(e => assert(e.getMessage.contains("IVF BUILD INDEX"), e.getMessage))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
